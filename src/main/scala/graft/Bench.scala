@@ -83,8 +83,13 @@ object Bench {
     // it where the round artifact can always recover it in full.
     // Write-then-atomic-move, and no fixed shared /tmp path: two
     // concurrent bench JVMs must neither clobber nor tear each other.
-    for (p <- Seq(s"/tmp/graft_bench_${ProcessHandle.current.pid}.json",
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_selfcapture.json")))
+    // The default committed capture is a full run's: a subset run
+    // keeps only its per-pid copy unless SPARK_GRAFT_BENCH_OUT says
+    // where to write.
+    val fullRun = ordered.size == SparkEntry.queries.size
+    val out = sys.env.get("SPARK_GRAFT_BENCH_OUT")
+      .orElse(Option.when(fullRun)("BENCH_selfcapture.json"))
+    for (p <- s"/tmp/graft_bench_${ProcessHandle.current.pid}.json" +: out.toSeq)
       try {
         val target = java.nio.file.Paths.get(p)
         val tmp = java.nio.file.Files.createTempFile(

@@ -116,15 +116,8 @@ object Admission {
 
   private def store(path: String, which: String) = s"$path/$which"
 
-  // dev-only stage visibility for the optimization profiles
-  private def debugTime[A](tag: String)(f: => A): A =
-    if (!sys.env.contains("GRAFT_ADM_DEBUG")) f
-    else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[adm] $tag%-18s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      r
-    }
+  /** The decision log's store: plain parquet segments. */
+  private val admittedStore = new SegmentStore
 
   /** Initialize all stores empty. LSH parameters are fixed for the
     * life of the loop, like any [[MinHashIndex]]; `semanticCentroids`
@@ -179,8 +172,7 @@ object Admission {
       if (!perceptual) withEmb
       else (0 until 4).foldLeft(withEmb)((df, c) =>
         df.withColumn(s"c$c", lit(null).cast("int")))
-    LsmSegments.initBase(spark, store(path, "admitted"))(p =>
-      emptyAdmitted.write.mode("overwrite").parquet(p))
+    admittedStore.initBaseWith(spark, store(path, "admitted"))(emptyAdmitted)
     ContentHashIndex.write(empty, store(path, "exact"))
     MinHashIndex.write(empty, store(path, "neardup"), shingleN, numHashes, bands)
     if (perceptual)
@@ -278,7 +270,7 @@ object Admission {
     val hashed = shard
       .withColumn("text_hash", xxhash64(col("text")))
       .localCheckpoint(eager = true)
-    val exactSurvivors = debugTime("exact stage")(try {
+    val exactSurvivors = try {
       val exactDropped = ContentHashIndex
         .probeNewPlan(spark, store(path, "exact"),
           hashed.select(col("doc_id"), col("text_hash")))
@@ -293,21 +285,21 @@ object Admission {
         .select(shardCols.map(c => col(s"first.$c").as(c)): _*)
         .join(broadcast(exactDropped), Seq("doc_id"), "left_anti")
         .localCheckpoint(eager = true)
-    } finally Storage.unpersistLocalCheckpoint(hashed))
-    val nearSurvivors = debugTime("neardup stage")(try {
+    } finally Storage.unpersistLocalCheckpoint(hashed)
+    val nearSurvivors = try {
       // near-dup stage: pairs touching the shard, vs index ∪ shard
       // (eager, output-sized — released below)
       val pairs = MinHashIndex.probePairs(
         spark, store(path, "neardup"), exactSurvivors, threshold)
       try dropPaired(exactSurvivors, pairs)
       finally Storage.unpersistLocalCheckpoint(pairs)
-    } finally Storage.unpersistLocalCheckpoint(exactSurvivors))
+    } finally Storage.unpersistLocalCheckpoint(exactSurvivors)
     // perceptual stage (when on): the same drop law over the hamming
     // ≤ 3 pairs touching the shard — the signature probe is o(index)
     // and runs BEFORE the (embedding-heavy) semantic stage
     val percSurvivors =
       if (!hasPerceptual(spark, path)) nearSurvivors
-      else debugTime("perceptual stage")(try {
+      else try {
         val pairs = HammingIndex.probePairs(
           spark, store(path, "perceptual"),
           nearSurvivors.select(col("doc_id"),
@@ -315,9 +307,9 @@ object Admission {
           maxHamming = 3, maxBucket = perceptualMaxBucket)
         try dropPaired(nearSurvivors, pairs)
         finally Storage.unpersistLocalCheckpoint(pairs)
-      } finally Storage.unpersistLocalCheckpoint(nearSurvivors))
+      } finally Storage.unpersistLocalCheckpoint(nearSurvivors)
     if (!hasSemantic(spark, path)) percSurvivors
-    else debugTime("semantic stage")(try {
+    else try {
       // semantic stage: same drop law over the same-inverted-list
       // cosine pairs vs the indexed embeddings ∪ the surviving shard.
       // Compressed tier: ADC shortlist over the PQ codes, exact
@@ -338,7 +330,7 @@ object Admission {
           semanticThreshold, semanticMaxList)
       try dropPaired(percSurvivors, pairs)
       finally Storage.unpersistLocalCheckpoint(pairs)
-    } finally Storage.unpersistLocalCheckpoint(percSurvivors))
+    } finally Storage.unpersistLocalCheckpoint(percSurvivors)
   }
 
   /** Admit one epoch: decide (or, on replay, re-read the committed
@@ -355,13 +347,13 @@ object Admission {
     // fail fast on a loop that was never [[init]]ed — appendEpoch
     // itself would happily commit into a half-existing store
     LsmSegments.current(spark, admittedPath)
-    debugTime("wal commit")(LsmSegments.appendEpoch(spark, admittedPath, epoch) { p =>
+    LsmSegments.appendEpoch(spark, admittedPath, epoch) { p =>
       val admitted = decide(
         spark, path, shard, threshold, semanticThreshold,
         semanticMaxList, semanticShortlist, perceptualMaxBucket)
       try admitted.write.mode("overwrite").parquet(p)
       finally Storage.unpersistLocalCheckpoint(admitted)
-    })
+    }
     val admitted = spark.read.parquet(s"$admittedPath/deltas/$epoch")
     // the per-store index appends are mutually independent (disjoint
     // store dirs, each individually idempotent and marker-guarded; the
@@ -394,19 +386,14 @@ object Admission {
     // independent appends overlap (guide §2.6); the crash-safety proof
     // only orders them AFTER the admitted commit, never relative to
     // each other — see [[Storage.runConcurrently]]
-    debugTime("index appends")(Storage.runConcurrently(appends.result()))
+    Storage.runConcurrently(appends.result())
     admitted
   }
 
   /** The admitted corpus: one consistent snapshot of the admitted
     * store (base ∪ committed deltas). */
-  def admittedAll(spark: SparkSession, path: String): DataFrame = {
-    val (basePath, deltaPaths) =
-      LsmSegments.liveSegments(spark, store(path, "admitted"))
-    deltaPaths.foldLeft(spark.read.parquet(basePath)) {
-      (acc, p) => acc.unionByName(spark.read.parquet(p))
-    }
-  }
+  def admittedAll(spark: SparkSession, path: String): DataFrame =
+    admittedStore.readAll(spark, store(path, "admitted"))
 
   /** The admitted corpus AS OF a committed epoch — the decision log's
     * prefix, served from retained generations ([[LsmSegments
@@ -416,8 +403,7 @@ object Admission {
     * audit law AdmissionSpec pins — so the loop's whole history is
     * reproducible from disk without replaying any ingest. */
   def admittedAsOf(spark: SparkSession, path: String, epoch: Long): DataFrame =
-    LsmSegments.foldAsOf(
-      spark, store(path, "admitted"), epoch, spark.read.parquet(_))
+    admittedStore.readAsOf(spark, store(path, "admitted"), epoch)
 
   /** Committed epochs of the admitted store (== fully decided
     * epochs). */
@@ -437,26 +423,17 @@ object Admission {
     * by which point the stream checkpoint has committed the epoch and
     * it can never replay). */
   def compact(spark: SparkSession, path: String, retainGens: Int = 0): Unit = {
-    LsmSegments.compact(spark, store(path, "admitted"),
-      load = ps => ps.map(spark.read.parquet(_)).reduce(_.unionByName(_)),
-      write = (df, p) => df.write.mode("overwrite").parquet(p))
-    LsmSegments.gc(spark, store(path, "admitted"), retainGens)
-    ContentHashIndex.compact(spark, store(path, "exact"))
-    ContentHashIndex.gc(spark, store(path, "exact"), retainGens)
-    MinHashIndex.compact(spark, store(path, "neardup"))
-    MinHashIndex.gc(spark, store(path, "neardup"), retainGens)
-    if (hasPerceptual(spark, path)) {
-      HammingIndex.compact(spark, store(path, "perceptual"))
-      HammingIndex.gc(spark, store(path, "perceptual"), retainGens)
-    }
-    if (hasSemantic(spark, path)) {
-      if (hasSemanticPq(spark, path)) {
-        IvfPqIndex.compact(spark, store(path, "semantic"))
-        IvfPqIndex.gc(spark, store(path, "semantic"), retainGens)
-      } else {
-        IvfIndex.compact(spark, store(path, "semantic"))
-        IvfIndex.gc(spark, store(path, "semantic"), retainGens)
-      }
+    val semantic =
+      if (!hasSemantic(spark, path)) Nil
+      else Seq("semantic" ->
+        (if (hasSemanticPq(spark, path)) IvfPqIndex else IvfIndex.segments))
+    val perceptual =
+      if (hasPerceptual(spark, path)) Seq("perceptual" -> HammingIndex) else Nil
+    (Seq("admitted" -> admittedStore, "exact" -> ContentHashIndex,
+      "neardup" -> MinHashIndex) ++ perceptual ++ semantic).foreach {
+      case (which, s) =>
+        s.compact(spark, store(path, which))
+        s.gc(spark, store(path, which), retainGens)
     }
   }
 }

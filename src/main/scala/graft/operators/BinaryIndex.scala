@@ -16,33 +16,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Longs round-trip parquet exactly, so [[serveAll]] over any
   * base/delta split is hash-identical to [[Similarity.binaryKnn]]
   * over the union (pinned by spec + the `knn_binary_delta` oracle). */
-object BinaryIndex {
+object BinaryIndex extends SegmentStore {
 
-  private def writeSegment(df: DataFrame, p: String): Unit =
-    df.write.mode("overwrite").parquet(p)
+  override protected def encode(
+      spark: SparkSession, path: String, vectors: DataFrame): DataFrame =
+    Similarity.binarySignatures(vectors)
 
   /** Pack `vectors` (vec_id, embedding) and persist as base
     * generation 0. */
   def write(vectors: DataFrame, path: String): Unit =
-    LsmSegments.initBase(vectors.sparkSession, path)(p =>
-      writeSegment(Similarity.binarySignatures(vectors), p))
-
-  /** Idempotently pack + append one epoch of vectors as a delta
-    * segment; false = epoch already committed (replay — no write). */
-  def appendEpoch(
-      spark: SparkSession, path: String, epoch: Long,
-      vectors: DataFrame): Boolean =
-    LsmSegments.appendEpoch(spark, path, epoch)(p =>
-      writeSegment(Similarity.binarySignatures(vectors), p))
-
-  /** One consistent snapshot: current base generation ∪ committed
-    * unfolded deltas. */
-  def readAll(spark: SparkSession, path: String): DataFrame = {
-    val (basePath, deltaPaths) = LsmSegments.liveSegments(spark, path)
-    deltaPaths.foldLeft(spark.read.parquet(basePath)) {
-      (acc, p) => acc.unionByName(spark.read.parquet(p))
-    }
-  }
+    initBaseWith(vectors.sparkSession, path)(encode(vectors.sparkSession, path, vectors))
 
   /** Top-k by hamming distance for `queries` = (query_id, qsig:
     * array<long> — pack with [[Similarity.binarySignatures]]),
@@ -63,17 +46,4 @@ object BinaryIndex {
     Similarity.saltedTopK(
       Similarity.binaryScore(snapshot, queries),
       score = "hamming", ascending = true, k = k, salts = salts)
-
-  /** Fold committed deltas into a new base generation (marker written
-    * last — interleaved readers stay consistent); data retired by
-    * [[gc]]. */
-  def compact(spark: SparkSession, path: String): Unit =
-    LsmSegments.compact(spark, path,
-      load = ps => ps.map(spark.read.parquet(_)).reduce(_.unionByName(_)),
-      write = writeSegment)
-
-  /** Retire superseded generations + folded delta data (epoch markers
-    * kept — the replay guard). */
-  def gc(spark: SparkSession, path: String, retainGens: Int = 0): Unit =
-    LsmSegments.gc(spark, path, retainGens)
 }

@@ -468,9 +468,6 @@ object Dedup {
         Storage.unpersistLocalCheckpoint(labels)
         labels = next.select("doc_id", "cluster_id")
         it += 1
-        // dev-only round visibility for the optimization profiles
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          println(s"[cc] round $it converged=$converged")
       }
       require(converged,
         s"connectedComponents did not converge in $maxIter rounds — raise maxIter")

@@ -37,9 +37,26 @@ import org.apache.spark.sql.functions._
   * compaction-race test). */
 object IvfIndex {
 
-  private def loadSegment(spark: SparkSession, p: String): DataFrame =
-    spark.read.parquet(p)
-      .select(col("vec_id"), col("embedding"), col("c_id").cast("long").as("c_id"))
+  /** The segment store. Held rather than extended: [[readAll]] and
+    * [[readAsOf]] return (assignments, centroids) and read the pre-LSM
+    * layout too. */
+  private[operators] object segments extends SegmentStore {
+    /** The c_id partition column comes back type-inferred (int), so it
+      * is cast to the long the serving plan expects. */
+    override protected def loadSegment(spark: SparkSession, p: String): DataFrame =
+      spark.read.parquet(p)
+        .select(col("vec_id"), col("embedding"), col("c_id").cast("long").as("c_id"))
+
+    /** c_id-partitioned with the empty-frame fallback, shared with
+      * [[IvfPqIndex]] — see [[LsmSegments.writeCidPartitionedSegment]]. */
+    override protected def writeSegment(df: DataFrame, p: String): Unit =
+      LsmSegments.writeCidPartitionedSegment(df, p)
+
+    /** Appends assign against the STORED trained centroids. */
+    override protected def encode(
+        spark: SparkSession, path: String, vectors: DataFrame): DataFrame =
+      Similarity.ivfAssign(vectors, spark.read.parquet(s"$path/centroids"))
+  }
 
   /** Resolve (basePath, deltaPaths) with back-compat for the pre-LSM
     * on-disk layout: an index persisted before the generation-pointer
@@ -62,11 +79,6 @@ object IvfIndex {
     else LsmSegments.liveSegments(spark, path)
   }
 
-  /** c_id-partitioned with the empty-frame fallback, shared with
-    * [[IvfPqIndex]] — see [[LsmSegments.writeCidPartitionedSegment]]. */
-  private def writeSegment(df: DataFrame, p: String): Unit =
-    LsmSegments.writeCidPartitionedSegment(df, p)
-
   /** Build the assignment from `centroids` and persist both halves
     * (base generation 0, committed by its generation marker). */
   def write(embeddings: DataFrame, centroids: DataFrame, path: String): Unit = {
@@ -74,17 +86,15 @@ object IvfIndex {
     // the assignment already encodes from the in-memory centroids, so
     // the centroids write and the base write are independent jobs —
     // overlap them (guide §2.6); marker after both settle
-    LsmSegments.initBaseWith(spark, path, Seq(
-      () => centroids.write.mode("overwrite").parquet(s"$path/centroids")))(p =>
-      writeSegment(Similarity.ivfAssign(embeddings, centroids), p))
+    segments.initBaseWith(spark, path, Seq(
+      () => centroids.write.mode("overwrite").parquet(s"$path/centroids")))(
+      Similarity.ivfAssign(embeddings, centroids))
   }
 
-  /** Load the current base generation + centroids (no deltas). The
-    * c_id partition column comes back type-inferred (int), so it is
-    * cast to the long the serving plan expects. */
+  /** Load the current base generation + centroids (no deltas). */
   def read(spark: SparkSession, path: String): (DataFrame, DataFrame) = {
     val (basePath, _) = resolveSegments(spark, path)
-    (loadSegment(spark, basePath), spark.read.parquet(s"$path/centroids"))
+    (segments.fold(spark, (basePath, Nil)), spark.read.parquet(s"$path/centroids"))
   }
 
   /** Serve top-k from the persisted index: probe-list selection +
@@ -101,31 +111,18 @@ object IvfIndex {
   def committedEpochs(spark: SparkSession, path: String): Seq[Long] =
     LsmSegments.committedEpochs(spark, path)
 
-  /** Idempotently append one epoch of `vectors` (vec_id, embedding) as
-    * a delta segment: assign against the trained centroids, write the
-    * segment (overwrite — replays clobber torn attempts), then the
-    * commit marker. Returns false if the epoch was already committed
-    * (the replay case — nothing is written). */
+  /** Idempotently assign + append one epoch of `vectors` (vec_id,
+    * embedding); false = epoch already committed (replay — no write). */
   def appendEpoch(
       spark: SparkSession, path: String, epoch: Long,
       vectors: DataFrame): Boolean =
-    LsmSegments.appendEpoch(spark, path, epoch) { p =>
-      val centroids = spark.read.parquet(s"$path/centroids")
-      writeSegment(Similarity.ivfAssign(vectors, centroids), p)
-    }
+    segments.appendEpoch(spark, path, epoch, vectors)
 
-  /** Load ONE consistent snapshot of the index: the current base
-    * generation plus the committed deltas not yet folded into it.
-    * Folded epochs are excluded by the generation marker's fold point
-    * (their commit markers outlive their data ON PURPOSE — they are
-    * the streaming replay guard). */
-  def readAll(spark: SparkSession, path: String): (DataFrame, DataFrame) = {
-    val (basePath, deltaPaths) = resolveSegments(spark, path)
-    val all = deltaPaths.foldLeft(loadSegment(spark, basePath)) {
-      (acc, p) => acc.unionByName(loadSegment(spark, p))
-    }
-    (all, spark.read.parquet(s"$path/centroids"))
-  }
+  /** One consistent snapshot of the assignment (base ∪ unfolded
+    * committed deltas) + the centroids. */
+  def readAll(spark: SparkSession, path: String): (DataFrame, DataFrame) =
+    (segments.fold(spark, resolveSegments(spark, path)),
+      spark.read.parquet(s"$path/centroids"))
 
   /** [[serve]] over base + committed deltas. */
   def serveAll(
@@ -143,7 +140,7 @@ object IvfIndex {
     * what `gc(retainGens = n)` kept; older epochs fail loudly. */
   def readAsOf(
       spark: SparkSession, path: String, epoch: Long): (DataFrame, DataFrame) =
-    (LsmSegments.foldAsOf(spark, path, epoch, loadSegment(spark, _)),
+    (segments.readAsOf(spark, path, epoch),
       spark.read.parquet(s"$path/centroids"))
 
   /** [[serveAll]] AS OF a committed delta epoch: historical top-k —
@@ -264,20 +261,14 @@ object IvfIndex {
     crossPairs.unionByName(withinPairs)
   }
 
-  /** Fold the committed deltas into a NEW base generation (the LSM
-    * compaction): writes `base/<gen+1>` from the merged snapshot, then
-    * commits the generation marker — readers interleaved between the
-    * two steps still resolve the OLD generation + deltas and count
-    * every vector exactly once. Old data is retired by [[gc]], not
-    * here, so lazy plans handed out before the compact stay valid. */
+  /** Fold committed deltas into a new base generation (marker last);
+    * data retired by [[gc]]. Current layout only — see
+    * [[resolveSegments]]. */
   def compact(spark: SparkSession, path: String): Unit =
-    LsmSegments.compact(spark, path,
-      load = ps => ps.map(loadSegment(spark, _)).reduce(_.unionByName(_)),
-      write = writeSegment)
+    segments.compact(spark, path)
 
-  /** Retire superseded generations + folded delta data (epoch commit
-    * markers are kept — the replay guard). Call when no readers hold
-    * lazy plans over the pre-compact snapshot. */
+  /** Retire superseded generations + folded delta data (epoch markers
+    * kept — the replay guard). */
   def gc(spark: SparkSession, path: String, retainGens: Int = 0): Unit =
-    LsmSegments.gc(spark, path, retainGens)
+    segments.gc(spark, path, retainGens)
 }

@@ -2,13 +2,21 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Marker-last LSM segment protocol shared by the persisted ANN index
-  * tiers ([[IvfIndex]], [[Sq8Index]], [[PqIndex]]): a generation-
-  * numbered BASE segment plus epoch-numbered DELTA segments, where
-  * every piece of data becomes visible only through a marker file
-  * written AFTER the data it commits — so readers never observe a
-  * torn write, replayed streaming epochs are detected and skipped,
-  * and compaction swaps in a rewritten base atomically.
+/** Marker-last LSM segment protocol: a generation-numbered BASE
+  * segment plus epoch-numbered DELTA segments, where every piece of
+  * data becomes visible only through a marker file written AFTER the
+  * data it commits — so readers never observe a torn write, replayed
+  * streaming epochs are detected and skipped, and compaction swaps in
+  * a rewritten base atomically.
+  *
+  * Callers use it through [[SegmentStore]], which owns the store
+  * operations (init, append, live and as-of reads, compact, gc) once.
+  * Its users: the ten index tiers ([[ContentHashIndex]],
+  * [[MinHashIndex]], [[HammingIndex]], [[RecordIndex]],
+  * [[BinaryIndex]], [[Sq8Index]], [[PqIndex]], [[MaxSimIndex]],
+  * [[IvfIndex]], [[IvfPqIndex]]), the `admitted` decision logs of
+  * [[Admission]] and [[RecordAdmission]], and — directly, for its
+  * replay guard — [[graft.streaming.StreamingOps]]' ingest streams.
   *
   * Layout under an index `path`:
   *  - `base/<gen>/`   — base segment data, one dir per generation;
@@ -123,21 +131,21 @@ private[graft] object LsmSegments {
       case _ => None
     }
 
-  /** All committed (generation, maxFoldedEpoch) markers. */
-  private def genMarkers(spark: SparkSession, path: String): Seq[(Long, Long)] =
-    listNames(spark, s"$path/gens").flatMap(parseGenMarker)
-
-  /** The current (generation, maxFoldedEpoch). Fails loudly on an
-    * uninitialized index — serving from a half-written index must
-    * never silently return empty results. */
-  def current(spark: SparkSession, path: String): (Long, Long) = {
-    val gens = genMarkers(spark, path)
+  /** All committed (generation, maxFoldedEpoch) markers. Fails loudly
+    * on an uninitialized index — serving from (or maintaining) a
+    * half-written index must never silently act on nothing. */
+  private def genMarkers(spark: SparkSession, path: String): Seq[(Long, Long)] = {
+    val gens = listNames(spark, s"$path/gens").flatMap(parseGenMarker)
     require(gens.nonEmpty,
       s"LsmSegments: no committed base generation under $path/gens — " +
         "the index was never initialized (or its init was torn before " +
         "the generation marker)")
-    gens.maxBy(_._1)
+    gens
   }
+
+  /** The current (generation, maxFoldedEpoch). */
+  def current(spark: SparkSession, path: String): (Long, Long) =
+    genMarkers(spark, path).maxBy(_._1)
 
   /** Commit a generation marker — the LAST step of init/compact; test
     * seam for the compaction-race spec. */
@@ -190,15 +198,12 @@ private[graft] object LsmSegments {
   }
 
   /** One consistent snapshot: the current base path plus the delta
-    * paths of committed epochs newer than the base's fold point. A
+    * paths of committed epochs newer than the base's fold point — the
+    * [[segmentsAsOf]] snapshot past the last commit. A
     * committed-but-missing delta dir surfaces as a loud read failure
     * downstream ([[gc]] only ever deletes deltas ≤ upto). */
-  def liveSegments(spark: SparkSession, path: String): (String, Seq[String]) = {
-    val (gen, upto) = current(spark, path)
-    val deltas = committedEpochs(spark, path).filter(_ > upto)
-      .map(e => s"$path/deltas/$e")
-    (s"$path/base/$gen", deltas)
-  }
+  def liveSegments(spark: SparkSession, path: String): (String, Seq[String]) =
+    segmentsAsOf(spark, path, Long.MaxValue)
 
   /** TIME TRAVEL: the consistent snapshot AS OF delta epoch `epoch` —
     * the index exactly as a reader saw it right after that epoch's
@@ -224,10 +229,6 @@ private[graft] object LsmSegments {
   def segmentsAsOf(
       spark: SparkSession, path: String, epoch: Long): (String, Seq[String]) = {
     val gens = genMarkers(spark, path)
-    require(gens.nonEmpty,
-      s"LsmSegments: no committed base generation under $path/gens — " +
-        "the index was never initialized (or its init was torn before " +
-        "the generation marker)")
     val eligible = gens.filter(_._2 <= epoch)
     require(eligible.nonEmpty,
       s"LsmSegments: as-of epoch $epoch is older than the time-travel " +
@@ -241,14 +242,12 @@ private[graft] object LsmSegments {
     (s"$path/base/$gen", deltas)
   }
 
-  /** Fold the [[segmentsAsOf]] snapshot through a tier's own segment
-    * loader — the shared body of every tier's `readAsOf`. */
-  private[graft] def foldAsOf(
-      spark: SparkSession, path: String, epoch: Long,
-      load: String => DataFrame): DataFrame = {
-    val (basePath, deltaPaths) = segmentsAsOf(spark, path, epoch)
-    deltaPaths.foldLeft(load(basePath))((acc, p) => acc.unionByName(load(p)))
-  }
+  /** A resolved (base, deltas) snapshot read through a store's own
+    * segment loader — the one base ∪ deltas fold every read and
+    * [[compact]] share. */
+  private[graft] def fold(
+      segments: (String, Seq[String]), load: String => DataFrame): DataFrame =
+    segments._2.foldLeft(load(segments._1))((acc, p) => acc.unionByName(load(p)))
 
   /** Fold committed deltas into a NEW base generation: read the live
     * snapshot via `load`, `write` it to `base/<gen+1>`, then commit
@@ -257,13 +256,13 @@ private[graft] object LsmSegments {
     * consistent throughout. No-op when there is nothing to fold. */
   def compact(
       spark: SparkSession, path: String,
-      load: Seq[String] => DataFrame,
+      load: String => DataFrame,
       write: (DataFrame, String) => Unit): Unit = {
     val (gen, upto) = current(spark, path)
     val epochs = committedEpochs(spark, path).filter(_ > upto)
     if (epochs.nonEmpty) {
-      val (basePath, deltaPaths) = liveSegments(spark, path)
-      write(load(basePath +: deltaPaths), s"$path/base/${gen + 1}")
+      write(fold((s"$path/base/$gen", epochs.map(e => s"$path/deltas/$e")), load),
+        s"$path/base/${gen + 1}")
       writeGenMarker(spark, path, gen + 1, epochs.max)
     }
   }
@@ -289,9 +288,6 @@ private[graft] object LsmSegments {
     * so gc runs between appends, never concurrent with one. */
   def gc(spark: SparkSession, path: String, retainGens: Int = 0): Unit = {
     val gens = genMarkers(spark, path).sortBy(-_._1)
-    require(gens.nonEmpty,
-      s"LsmSegments: no committed base generation under $path/gens — " +
-        "nothing to gc on an uninitialized index")
     val kept = gens.take(retainGens + 1)
     val keptGens = kept.map(_._1).toSet
     // uptos are monotone in gen, so the oldest retained generation

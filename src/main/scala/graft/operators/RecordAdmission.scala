@@ -58,14 +58,16 @@ object RecordAdmission {
 
   private def store(path: String, which: String) = s"$path/$which"
 
+  /** The decision log's store: plain parquet segments. */
+  private val admittedStore = new SegmentStore
+
   private def emptyRecords(spark: SparkSession): DataFrame =
     spark.range(0).select(col("id"), lit("").as("name"),
       lit("").as("block"))
 
   /** Initialize both stores empty. */
   def init(spark: SparkSession, path: String): Unit = {
-    LsmSegments.initBase(spark, store(path, "admitted"))(p =>
-      emptyRecords(spark).write.mode("overwrite").parquet(p))
+    admittedStore.initBaseWith(spark, store(path, "admitted"))(emptyRecords(spark))
     RecordIndex.write(emptyRecords(spark), store(path, "register"))
   }
 
@@ -126,21 +128,15 @@ object RecordAdmission {
 
   /** The admitted register: one consistent snapshot (base ∪ committed
     * deltas) of the decision log. */
-  def admittedAll(spark: SparkSession, path: String): DataFrame = {
-    val (basePath, deltaPaths) =
-      LsmSegments.liveSegments(spark, store(path, "admitted"))
-    deltaPaths.foldLeft(spark.read.parquet(basePath)) {
-      (acc, p) => acc.unionByName(spark.read.parquet(p))
-    }
-  }
+  def admittedAll(spark: SparkSession, path: String): DataFrame =
+    admittedStore.readAll(spark, store(path, "admitted"))
 
   /** The admitted register AS OF a committed epoch — the decision
     * log's prefix ([[Admission.admittedAsOf]]'s audit law; run
     * maintenance with `retainGens ≥ 1` to keep pre-fold epochs
     * auditable). */
   def admittedAsOf(spark: SparkSession, path: String, epoch: Long): DataFrame =
-    LsmSegments.foldAsOf(
-      spark, store(path, "admitted"), epoch, spark.read.parquet(_))
+    admittedStore.readAsOf(spark, store(path, "admitted"), epoch)
 
   /** Committed epochs of the admitted store (== fully decided
     * epochs). */
@@ -150,10 +146,8 @@ object RecordAdmission {
   /** Maintenance: fold + retire both stores ([[Admission.compact]]'s
     * retainGens contract — `retainGens = 1` is the in-loop policy). */
   def compact(spark: SparkSession, path: String, retainGens: Int = 0): Unit = {
-    LsmSegments.compact(spark, store(path, "admitted"),
-      load = ps => ps.map(spark.read.parquet(_)).reduce(_.unionByName(_)),
-      write = (df, p) => df.write.mode("overwrite").parquet(p))
-    LsmSegments.gc(spark, store(path, "admitted"), retainGens)
+    admittedStore.compact(spark, store(path, "admitted"))
+    admittedStore.gc(spark, store(path, "admitted"), retainGens)
     RecordIndex.compact(spark, store(path, "register"))
     RecordIndex.gc(spark, store(path, "register"), retainGens)
   }

@@ -274,9 +274,8 @@ object Profile {
 
     // round-17 optimization profiles ----------------------------------
 
-    // connected components: rounds + per-call cost on the two hot pair
-    // graphs (image aHash pairs, multi-field ER pairs). Run with
-    // GRAFT_CC_DEBUG=1 to see the round count.
+    // connected components: per-call cost on the two hot pair graphs
+    // (image aHash pairs, multi-field ER pairs).
     run("cc") {
       val docs = graft.Tables.documents(spark, sfDir)
       val sigs = graft.multimodal.Multimodal.imageAHash(
