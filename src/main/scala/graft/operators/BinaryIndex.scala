@@ -25,7 +25,7 @@ object BinaryIndex extends SegmentStore {
   /** Pack `vectors` (vec_id, embedding) and persist as base
     * generation 0. */
   def write(vectors: DataFrame, path: String): Unit =
-    initBaseWith(vectors.sparkSession, path)(encode(vectors.sparkSession, path, vectors))
+    initBaseWith(vectors.sparkSession, path)(Similarity.binarySignatures(vectors))
 
   /** Top-k by hamming distance for `queries` = (query_id, qsig:
     * array<long> — pack with [[Similarity.binarySignatures]]),
